@@ -1,8 +1,8 @@
 """Seeded input generator for the benchmark workloads.
 
 Every table is a single-row-group parquet file with the schema of the
-engine's test tables (TPC-H-like star schema plus `events`, `documents`
-and `embeddings`). The same seed and scale give byte-identical files.
+engine's test tables (TPC-H-like star schema plus `events` and
+`documents`). The same seed and scale give byte-identical files.
 
     python3 perfbench/gen.py <workload> <seed> <out_dir>
 """
@@ -110,7 +110,6 @@ def gen_warehouse(rng, out, sf):
         "l_linestatus": rng.choice(["F", "O"], n_li),
         "l_shipdate": days_to_ts(EPOCH_DAY_1995 + 1 + rng.integers(0, 2499, n_li))})
     gen_events(rng, out, sf)
-    gen_corpus(rng, out, sf, 1)
 
 
 def gen_events(rng, out, sf):
@@ -144,9 +143,8 @@ def gen_texts(rng, n):
 
 
 def gen_corpus(rng, out, sf, copies):
-    """Base documents/embeddings plus `copies - 1` near-duplicate replicas:
-    each replica appends one seed-chosen token to the text and shifts every
-    vector component by a seed-chosen epsilon."""
+    """Base documents plus `copies - 1` near-duplicate replicas: each
+    replica appends one seed-chosen token to the text."""
     n_docs = int(50_000 * sf)
     texts = gen_texts(rng, n_docs)
     langs = rng.choice(LANGS, n_docs, p=LANG_P)
@@ -166,27 +164,6 @@ def gen_corpus(rng, out, sf, copies):
         "lang": [all_langs[i] for i in o],
         "source": [sources[i] for i in o],
         "n_chars": pa.array([len(all_texts[i]) for i in o], pa.int64())})
-
-    n_vec = int(20_000 * sf)
-    dim = 64
-    centers = rng.normal(0, 1, (10, dim))
-    labels = rng.integers(0, 10, n_vec)
-    base = centers[labels] + rng.normal(0, 1.2, (n_vec, dim))
-    base = (base / np.linalg.norm(base, axis=1, keepdims=True)).astype("float32")
-    vecs, vids, vlabels = [], [], []
-    for rep in range(copies):
-        eps = np.float32(0 if rep == 0 else rng.uniform(0.0005, 0.002))
-        vecs.append(base + eps)
-        vids.append(np.arange(n_vec) + rep * ID_STRIDE)
-        vlabels.append(labels)
-    vecs = np.concatenate(vecs)
-    vids = np.concatenate(vids)
-    vlabels = np.concatenate(vlabels)
-    o = shuffled(rng, len(vids))
-    write(out, "embeddings", {
-        "vec_id": pa.array(vids[o], pa.int64()),
-        "embedding": pa.array(list(vecs[o]), pa.list_(pa.float32())),
-        "label": pa.array(vlabels[o], pa.int32())})
 
 
 def gen_runner(rng, out, scripts_dir, spec):

@@ -32,8 +32,6 @@ import oracle  # noqa: E402
 
 # Run budget: a run (build excluded) must end well inside 180 s.
 JVM_TIMEOUT_S = 150
-# A canary that moved by more than this share flags the run as noisy.
-CANARY_BOUND = 0.1
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
     "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -127,8 +125,7 @@ def build():
 
 def run_jvm(cp, args, work, spec, timeout):
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
-    heap = os.environ.get("PERFBENCH_HEAP", "3g")
-    cmd = ["java", f"-Xmx{heap}", "-XX:+UseParallelGC",
+    cmd = ["java", "-Xmx3g", "-XX:+UseParallelGC",
            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
            "-Dspark.sql.session.timeZone=UTC", "-Dderby.stream.error.file=" +
            os.path.join(work, "derby.log")]
@@ -166,6 +163,15 @@ def median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
+def p90(xs):
+    """Interpolated 90th percentile."""
+    xs = sorted(xs)
+    pos = 0.9 * (len(xs) - 1)
+    lo = int(pos)
+    hi = min(lo + 1, len(xs) - 1)
+    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+
+
 def tail(xs):
     """The highest of p99/p95/p90/p75 with at least ten samples beyond it;
     p90 (interpolated) when no percentile has ten. Returns (value, pct)."""
@@ -175,12 +181,7 @@ def tail(xs):
         k = int(n * p / 100)
         if n - k - 1 >= 10:
             return xs[k], p
-    if n < 2:
-        return xs[0], 90
-    pos = 0.9 * (n - 1)
-    lo = int(pos)
-    hi = min(lo + 1, n - 1)
-    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo), 90
+    return p90(xs), 90
 
 
 def entry_s(e):
@@ -205,11 +206,22 @@ def batch_metrics(res, spec, fams, traced):
     def pass_ms(ps):
         return [p["wall_s"] * 1000 for p in ps]
 
+    def tail_pass_ms(ps):
+        """A run has too few passes for a tail of pass times, so the tail
+        pass is built per entry: each entry's p90 over the passes, plus the
+        median time a pass spends between entries."""
+        times = {}
+        for p in ps:
+            for e in p["entries"]:
+                times.setdefault(e["name"], []).append(entry_s(e))
+        glue = median([p["wall_s"] - sum(entry_s(e) for e in p["entries"]) for p in ps])
+        return 1000 * (sum(p90(xs) for xs in times.values()) + glue)
+
     # a batch workload's closed-loop round is one pass over its entries
     base = plain if plain else passes
     e2e = {"steady_s": cohort_s(base, False), "lifecycle_s": cohort_s(base, True)}
     e2e["tick_p50_ms"] = median(pass_ms(base))
-    e2e["tick_tail_ms"], e2e["tail_pct"] = tail(pass_ms(base))
+    e2e["tick_tail_ms"], e2e["tail_pct"] = tail_pass_ms(base), 90
     e2e["samples"] = len(base)
     if not traced:
         return e2e, {}
@@ -230,9 +242,18 @@ def batch_metrics(res, spec, fams, traced):
         stream_wall = median([sum(entry_s(e) for e in p["entries"] if e["name"] in stream_entries)
                               for p in tr])
         layer["streaming.lifecycle_gap_s"] = stream_wall - layer["streaming.batch_ms"] / 1000
-    layer["trace.overhead_steady_s"] = cohort_s(tr, False) - cohort_s(plain, False) if plain else 0.0
-    layer["trace.overhead_tick_ms"] = median(pass_ms(tr)) - median(pass_ms(plain)) if plain else 0.0
+    layer["trace.overhead_steady_s"] = trace_overhead(
+        passes, lambda p: sum(entry_s(e) for e in p["entries"] if not e["lifecycle"]))
+    layer["trace.overhead_tick_ms"] = trace_overhead(passes, lambda p: p["wall_s"] * 1000)
     return e2e, layer
+
+
+def trace_overhead(rounds, value):
+    """Mean over traced rounds of the round's value minus the mean of its
+    untraced neighbours: rounds alternate, so a warm-up trend cancels."""
+    diffs = [value(rounds[k]) - (value(rounds[k - 1]) + value(rounds[k + 1])) / 2
+             for k in range(1, len(rounds) - 1) if rounds[k]["traced"]]
+    return statistics.mean(diffs) if diffs else 0.0
 
 
 def counter_metrics(cs):
@@ -298,13 +319,8 @@ def runner_metrics(res, spec, traced):
         layer["engine.ready_ms_empty_journal"] = ys[0]
         layer["engine.ready_ms_full_history"] = ys[-1]
     layer.update(counter_metrics([t["counters"] for t in tr]))
-    # compile time is taken out: only the ticks that follow a rewrite pay it
-    layer["trace.overhead_steady_s"] = (
-        median([(jobs_ms(t) - t["compile_ms"]) / 1000 for t in tr])
-        - median([(jobs_ms(t) - t["compile_ms"]) / 1000 for t in plain])) if plain else 0.0
-    layer["trace.overhead_tick_ms"] = (
-        median([t["tick_ms"] - t["compile_ms"] for t in tr])
-        - median([t["tick_ms"] - t["compile_ms"] for t in plain])) if plain else 0.0
+    layer["trace.overhead_steady_s"] = trace_overhead(ticks, lambda t: jobs_ms(t) / 1000)
+    layer["trace.overhead_tick_ms"] = trace_overhead(ticks, lambda t: t["tick_ms"])
     return e2e, layer
 
 
@@ -355,7 +371,7 @@ def main(argv=None):
     fail_ratio = failed / attempted if attempted else 1.0
 
     canary0, canary1 = res["canary_start_ms"], res["canary_end_ms"]
-    noisy = abs(canary1 - canary0) / canary0 > CANARY_BOUND
+    noisy = abs(canary1 - canary0) / canary0 > canary_bound()
     log(f"perfbench: seed={args.seed} workload={args.workload} setup_s={res['setup_s']:.3f} "
         f"steady_s={e2e['steady_s']:.4f} lifecycle_s={e2e['lifecycle_s']:.4f} "
         f"tick_p50_ms={e2e['tick_p50_ms']:.1f} tick_tail_ms=p{e2e['tail_pct']}:{e2e['tick_tail_ms']:.1f} "
@@ -374,10 +390,20 @@ def main(argv=None):
         }
     else:
         metrics = layer_metrics(layer, res, gen_s, fail_ratio, noisy)
+    # the result line's keys are fixed, so the noise reading goes on the line before it
+    print(json.dumps({"workload": args.workload, "seed": args.seed, "host.canary_start_ms": canary0,
+                      "host.canary_end_ms": canary1, "host.noisy": noisy}))
     out = {"correct": failed == 0, "attempted": attempted, "failed": failed,
            "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}}
     print(json.dumps(out))
     return out
+
+
+def canary_bound():
+    """The benchmark's own bound: the tightest one on an end-to-end time."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        e2e = json.load(f)["end_to_end"]
+    return min(m["bound"] for m in e2e if m["unit"] in ("s", "ms"))
 
 
 def layer_metrics(layer, res, gen_s, fail_ratio, noisy):

@@ -182,16 +182,17 @@ final class Run(spark: SparkSession, opts: Main.Opts, tracer: Tracer,
   }
 
   /** Closed loop: `pass(i, tracedPass)` until `seconds` have gone by, at
-    * least twice. A traced run alternates untraced and traced passes,
-    * starting and ending untraced (so at least three), so the tracing
-    * overhead is measured within the run against passes on both sides.
+    * least `minPasses` times, and until `whole(count)` holds. A traced run
+    * alternates untraced and traced passes, starting untraced; with an odd
+    * count, each traced pass has an untraced one on both sides, against
+    * which its tracing overhead is measured.
     */
-  private def loop(pass: (Int, Boolean) => Map[String, Any]): Seq[Map[String, Any]] = {
+  private def loop(minPasses: Int, whole: Int => Boolean)(
+      pass: (Int, Boolean) => Map[String, Any]): Seq[Map[String, Any]] = {
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     val out = mutable.ArrayBuffer.empty[Map[String, Any]]
-    val minPasses = if (traced) 3 else 2
     var i = 0
-    while (System.nanoTime() < deadline || i < minPasses || (traced && i % 2 == 0)) {
+    while (System.nanoTime() < deadline || i < minPasses || !whole(i)) {
       val t = traced && i % 2 == 1
       out += pass(i, t)
       i += 1
@@ -237,7 +238,7 @@ final class Run(spark: SparkSession, opts: Main.Opts, tracer: Tracer,
     result("oracles") = mutable.LinkedHashMap(oracle: _*)
     val setupEnd = System.currentTimeMillis()
 
-    val passes = loop { (i, tracedPass) =>
+    val passes = loop(if (traced) 3 else 2, n => !traced || n % 2 == 1) { (i, tracedPass) =>
       val rows = mutable.ArrayBuffer.empty[Map[String, Any]]
       def runPass(): Unit = tracer.span(s"pass $i", "bench") {
         entries.foreach { case (name, lc) =>
@@ -292,6 +293,7 @@ final class Run(spark: SparkSession, opts: Main.Opts, tracer: Tracer,
     val hotTemplate = new String(Files.readAllBytes(Paths.get(s"$work/hot.scala.tmpl")), UTF_8)
     val hot = new File(s"$scripts/hot.scala")
     val hotEvery = opts("hot-every").toInt
+    require(hotEvery % 2 == 1, "--hot-every must be odd")
     var hotVersion = 0
     def writeHot(v: Int): Unit = {
       val before = hot.lastModified()
@@ -335,10 +337,17 @@ final class Run(spark: SparkSession, opts: Main.Opts, tracer: Tracer,
         "counters" -> cnt)
     }
 
-    // warm-up tick: compiles every script and runs each job once
-    result("warmup") = tracer.muted(Seq(oneTick(0, tracedTick = false)))
+    // Two warm-up ticks: the first compiles every script and runs each job
+    // once; readiness lookups still speed up sharply on the second.
+    result("warmup") = tracer.muted(Seq(oneTick(-1, tracedTick = false), oneTick(0, tracedTick = false)))
     val setupEnd = System.currentTimeMillis()
-    val ticks = loop((i, t) => oneTick(i + 1, t))
+    // Whole rewrite cycles only, so every run has the same share of recompile
+    // ticks. A traced run alternates, so its cycle is twice as long, plus a
+    // closing untraced tick; with `hotEvery` odd, its traced ticks and the
+    // untraced ticks beside them weigh the rewrites equally.
+    val cycle = if (traced) 2 * hotEvery else hotEvery
+    val closing = if (traced) 1 else 0
+    val ticks = loop(cycle + closing, _ % cycle == closing)((i, t) => oneTick(i + 1, t))
     result("ticks") = ticks
     result("final_hot_version") = hotVersion
     result("oracles") = Seq("http_get_echo", "kv_get_enrich", "kf_push_roundtrip")
