@@ -1,6 +1,7 @@
 // Lives under org.apache.spark.sql to reach the private[sql] Column <->
-// Expression converters; the rest of the engine goes through these two
-// functions instead of touching Spark internals directly.
+// Expression converters and the private[spark] listener bus; the rest of
+// the engine goes through these functions instead of touching Spark
+// internals directly.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
@@ -18,6 +19,12 @@ object Bridge {
     */
   def scalaUdf(f: UserDefinedFunction, children: Seq[Expression]): Expression =
     UserDefinedFunctionUtils.toScalaUDF(f.asInstanceOf[SparkUserDefinedFunction], children)
+
+  /** Blocks until the listener bus has delivered every queued event, so a
+    * listener read after an action has seen all of that action's jobs.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Release the storage blocks behind a `localCheckpoint(true)`-pinned
     * Dataset. Such a Dataset is a `LogicalRDD` leaf over a persisted RDD;

@@ -68,10 +68,10 @@ class Runner(spark: SparkSession, journal: Journal,
     }
 
   /** Scheduler loop, reference tick = 1 minute
-    * (reference: InterpreterLoader.scala:25,127-131). Bounded for testability;
-    * stops early if any job throws a Throwable-valued result? No — the
-    * reference stops when the *entrance script* returns a Throwable; here a
-    * `stop` predicate generalizes that.
+    * (reference: InterpreterLoader.scala:25,127-131). Bounded for testability.
+    * The reference stops when the *entrance script* returns a Throwable;
+    * here a `stop` predicate over a tick's results generalizes that, and the
+    * loop halts on the tick where it fires. Returns the ticks run.
     */
   def loop(ticks: Int, tickMs: Long = 60000L,
       stop: Seq[(String, String)] => Boolean = _ => false): Int = {
@@ -113,8 +113,6 @@ class ScriptJobs[T](compile: String => T, mtimeOf: String => Long,
         fresh
     }
   }
-
-  def cachedPaths: Seq[String] = cache.keys.toSeq.sorted
 
   /** Close every cached Closeable instance and drop the cache — the
     * shutdown-hook path (reference closes instances on replacement only;

@@ -24,12 +24,13 @@ object Dedup {
 
   /** Ensure at least default parallelism before per-row signature work
     * (hashing/shingling/embedding math): a narrow input would otherwise put
-    * all per-row compute on a few cores. The declarative knob alone
-    * (`spark.sql.files.minPartitionNum`, set in GraftSession.configure) is
-    * NOT sufficient: it splits a small parquet file into >= cores BYTE
-    * ranges, but parquet assigns each ROW GROUP to the one range holding
-    * its start offset — a single-row-group file still lands every row in
-    * one partition (measured: 2-5x on the signature-heavy benchmarks).
+    * all per-row compute on a few cores. The declarative knob
+    * `spark.sql.files.minPartitionNum` is NOT sufficient, so the engine
+    * leaves it unset (see GraftSession.configure): it splits a small
+    * parquet file into >= cores BYTE ranges, but parquet assigns each ROW
+    * GROUP to the one range holding its start offset — a single-row-group
+    * file still lands every row in one partition (measured: 2-5x on the
+    * signature-heavy benchmarks).
     * Hence the physical-plan probe + conditional repartition. The probe
     * costs planning only: widen() is applied to scan-shaped inputs (no
     * exchanges below), where `df.rdd` builds but does not execute stages.

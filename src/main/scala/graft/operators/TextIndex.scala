@@ -403,7 +403,7 @@ object TextIndex {
     */
   def cdcChunks(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, maskBits: Int = 6): DataFrame =
-    widen(df)
+    Dedup.widen(df)
       .select(id.as("id"), posexplode(
         org.apache.spark.sql.graft.HashFunctions.cdcChunks(
           TextFunctions.tokensWs(text), shingleK, maskBits))
@@ -412,16 +412,6 @@ object TextIndex {
         col("c.start_tok").as("start_tok"), col("c.n_tok").as("n_tok"),
         col("c.chunk_text").as("chunk_text"),
         TextFunctions.fingerprint64(col("c.chunk_text")).as("chunk_fp"))
-
-  /** Ensure at least default parallelism before per-row gram hashing —
-    * same rationale and probe as [[Dedup.widen]]: a single small parquet
-    * file arrives as ONE partition and would serialize the shingle +
-    * md5 work onto one core (measured 7-14 s vs sub-second at sf0.1).
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** Positional word n-grams hashed to 60-bit fingerprints: (id, pos, gfp)
     * with `pos` the 0-based start token. Shares [[TextFunctions.wordShingles]]
@@ -434,7 +424,7 @@ object TextIndex {
     */
   private def positionalGrams(df: DataFrame, id: Column, text: Column,
       n: Int): DataFrame =
-    widen(df.select(id.as("id"), text.as("__text")))
+    Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"),
         posexplode(org.apache.spark.sql.graft.HashFunctions.shingleFps60(
           TextFunctions.tokensWs(col("__text")), n)).as(Seq("pos", "gfp")))
@@ -490,7 +480,7 @@ object TextIndex {
   def duplicateNgramMask(df: DataFrame, id: Column, text: Column,
       n: Int = 5, minDf: Long = 2): DataFrame = {
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
     val g = base.select(col("id"),
       posexplode(org.apache.spark.sql.graft.HashFunctions.shingleFps60(
@@ -573,7 +563,7 @@ object TextIndex {
     // (the cooccurrenceCounts lesson); released at the caller's boundary
     // via graft.Pins.unpinAll
     val base = graft.Pins.pin(
-      widen(df.select(id.as("id"), text.as("__text")))
+      Dedup.widen(df.select(id.as("id"), text.as("__text")))
         .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks")))
     val g = graft.Pins.pin(base.filter(size(col("toks")) >= n)
       .select(col("id"),
@@ -627,12 +617,12 @@ object TextIndex {
     import org.apache.spark.sql.graft.HashFunctions
     require(n >= 2, s"n must be >= 2, got $n")
     val tb = graft.Pins.pin(
-      widen(train.select(trainId.as("id"), trainText.as("__text")))
+      Dedup.widen(train.select(trainId.as("id"), trainText.as("__text")))
         .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks")))
     val tg = tb.filter(size(col("toks")) >= n)
       .select(col("id"),
         explode(HashFunctions.shingleFps60(col("toks"), n)).as("gfp"))
-    val eg = widen(eval.select(evalText.as("__text")))
+    val eg = Dedup.widen(eval.select(evalText.as("__text")))
       .select(TextFunctions.tokensWs(col("__text")).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(explode(HashFunctions.shingleFps60(col("toks"), n)).as("gfp"))
@@ -675,7 +665,7 @@ object TextIndex {
     */
   def bigramFamiliarity(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
     val bg = base.filter(size(col("toks")) >= 2)
       .select(col("id"),
@@ -716,7 +706,7 @@ object TextIndex {
     */
   def backoffFamiliarity(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
     // (g3, g2) pairs aligned by start position: trigram i backs off to
     // the bigram starting at the same token
@@ -808,7 +798,7 @@ object TextIndex {
     */
   def bigramLmCounts(df: DataFrame, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(text.as("__text")))
+    val base = Dedup.widen(df.select(text.as("__text")))
       .select(TextFunctions.tokensWs(col("__text")).as("toks"))
     // size-guard: ShingleFps60 on an EMPTY token array emits one
     // whole-text gram (the shingle contract), which here would count a
@@ -866,7 +856,7 @@ object TextIndex {
       .select(col("fp").as("g2"), col("cnt").as("c2"))
     val nTotal = broadcast(model.filter(col("kind") === "n")
       .select(col("cnt").as("n_total")))
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
     // bigram position stream, each with its prev/cur unigram fps aligned
     // by start position (arrays_zip, no self-join)
@@ -956,7 +946,7 @@ object TextIndex {
     * token count folds over the dl dim instead of re-aggregating the
     * postings, so the plan holds three (doc, term) posting aggregations
     * over narrow 2-column scans plus a column-less count — measured in
-    * `graft.tools.PlanProbe`: AQE does NOT currently fuse the identical
+    * `graft.Plans`' final plan: AQE does NOT currently fuse the identical
     * posting exchanges across the branches, so at an extreme corpus the
     * further step is materializing `postings` once (the production move
     * is a persisted inverted index anyway — see [[postingsIncremental]]).
@@ -967,8 +957,8 @@ object TextIndex {
     val src = df.select(id.as("__id"), text.as("__text"))
     val nDim = src.agg(count(lit(1)).as("__n"))
     // Two inline-build optimizations over the naive postings() feed, both
-    // exact (AQE does not fuse identical posting exchanges —
-    // PlanProbe-verified — so every avoided aggregation is real):
+    // exact (AQE does not fuse identical posting exchanges — verified on
+    // graft.Plans' final plan — so every avoided aggregation is real):
     // 1. the query-term prune is pushed BELOW the posting aggregation:
     //    tokens semi-join the broadcast term set before the (doc, term)
     //    count, so the aggregation and its exchange carry query-term
@@ -1033,7 +1023,7 @@ object TextIndex {
     // Pin the two SMALL derived dims (r20 guide §2.4 — remove repeated
     // passes): each is referenced twice downstream (dl by totDim + the
     // candidate join, qp by the df dim + the candidates), and AQE does
-    // not fuse the identical subtrees (PlanProbe-verified), so unpinned
+    // not fuse the identical subtrees (graft.Plans-verified), so unpinned
     // each reference RE-EXECUTES the full posting derivation — for the
     // from-postings path that was 4 evaluations of the caller's posting
     // table (an in-query incremental FOLD for bm25_from_index). Both
@@ -1098,7 +1088,7 @@ object TextIndex {
     * Scale shape: the corpus tokenizes twice — once into the unigram
     * aggregation (dictionary-sized by Heaps' law; the aggregated dim is
     * CHECKPOINTED because it feeds three consumers — N and both count
-    * joins — and identical subtrees are not fused, PlanProbe-verified on
+    * joins — and identical subtrees are not fused, graft.Plans-verified on
     * bm25), once into the map-side adjacent-pair zip (the token array
     * with its tail — no self-join of positions; pinning the tokenized
     * corpus to save this second pass would cost corpus-sized storage).
@@ -1322,7 +1312,7 @@ object TextIndex {
       patterns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graft.PatternFunctions
     require(patterns.nonEmpty, "keywordTag: empty pattern set")
-    widen(df.select(id.as("id"), text.as("__text")))
+    Dedup.widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"),
         posexplode(PatternFunctions.multiPatternHits(col("__text"), patterns)))
       .filter(col("col") > 0)
@@ -1421,8 +1411,8 @@ object TextIndex {
       candText: Column, n: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
     require(n >= 1, s"n must be >= 1, got $n")
-    val base = widen(pairs.select(pairId.as("pair_id"), refText.as("__r"),
-      candText.as("__c")))
+    val base = Dedup.widen(pairs.select(pairId.as("pair_id"),
+      refText.as("__r"), candText.as("__c")))
     def sideCounts(c: Column) = {
       val toks = TextFunctions.tokensWs(c)
       base.select(col("pair_id"), toks.as("__t"))
@@ -1485,7 +1475,7 @@ object TextIndex {
       n: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
     require(n >= 1, s"n must be >= 1, got $n")
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
     val tf = base
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("__t"))
       .filter(size(col("__t")) >= n)
@@ -1552,7 +1542,7 @@ object TextIndex {
     import org.apache.spark.sql.graft.HashFunctions
     require(window >= 1, s"window must be >= 1, got $window")
     require(k > 0, s"k must be positive, got $k")
-    val base = widen(df.select(text.as("__text")))
+    val base = Dedup.widen(df.select(text.as("__text")))
       .select(HashFunctions.shingleFps60(
         TextFunctions.tokensWs(col("__text")), 1).as("fps"))
     val nToks = size(col("fps"))
@@ -1596,7 +1586,7 @@ object TextIndex {
     // sliver of the vocabulary (AQE then broadcasts the label joins); in
     // the flat tail (t = 1) nothing prunes and the shuffle-hash path
     // carries it. fp computed AFTER the count agg, on vocabulary rows.
-    val dict = widen(df.select(text.as("__text")))
+    val dict = Dedup.widen(df.select(text.as("__text")))
       .select(explode(TextFunctions.tokensWs(col("__text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__tc"))
       .join(broadcast(kth), col("__tc") * (2L * window) >= col("__t"))
@@ -1758,7 +1748,7 @@ object TextIndex {
     * exactly this frame incrementally.
     */
   def tokenFpCounts(df: DataFrame, text: Column): DataFrame =
-    widen(df.select(text.as("__text")))
+    Dedup.widen(df.select(text.as("__text")))
       .select(explode(TextFunctions.tokensWs(col("__text"))).as("__t"))
       .select(TextFunctions.fingerprint64(col("__t")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("c"))

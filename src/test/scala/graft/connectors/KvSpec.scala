@@ -62,6 +62,23 @@ class KvSpec extends SparkSpec {
     assert(out === Array((1, "one"), (2, "two"), (3, null)))
   }
 
+  test("withMSet writes map and array<struct<k,v>> pairs, read back by " +
+      "withMGet; a null pairs value gives a null ret (reference jd_mset)") {
+    val f = freshFactory("kv-mset")
+    def mset(pairsSql: String): Array[(Int, String)] =
+      Kv.withMSet(
+          spark.sql(s"SELECT 1 AS id, $pairsSql AS pairs UNION ALL SELECT 2, NULL"),
+          col("pairs"), f)
+        .select("id", "ret").orderBy("id").as[(Int, String)].collect()
+    assert(mset("map('m:1', 'a', 'm:2', 'b')") === Array((1, "OK"), (2, null)))
+    assert(mset("array(named_struct('k', 's:1', 'v', 'x'), " +
+      "named_struct('k', 's:2', 'v', 'y'))") === Array((1, "OK"), (2, null)))
+    val got = Kv.withMGet(Seq(1).toDF("id"),
+        array(Seq("m:1", "m:2", "s:1", "s:2", "nope").map(lit): _*), f)
+      .select("ret").as[Seq[String]].head()
+    assert(got === Seq("a", "b", "x", "y", null))
+  }
+
   test("keys generator returns a sorted dataset of matches") {
     val f = freshFactory("kv-gen")
     Kv.seed(f, Seq("a:1" -> "x", "a:2" -> "y", "b:1" -> "z"))

@@ -53,6 +53,27 @@ class RunnerSpec extends SparkSpec {
     assert(j.lastExecution("fine").get.result === "42")
   }
 
+  test("loop honours the ticks bound, halts on the tick where `stop` " +
+      "fires, and journals every tick's outcome") {
+    var now = 9000000L
+    val j = new Journal(spark, tmpDir())
+    val runner = new Runner(spark, j, clock = () => { now += 1; now })
+    var runs = 0
+    runner.register(Job("job", Duration.ZERO, _ => {
+      runs += 1
+      if (runs == 5) throw new RuntimeException("fifth") else runs
+    }))
+    val stopOnFailure = (rs: Seq[(String, String)]) => rs.exists(_._2 == "FAILED")
+    // stop never fires: exactly `ticks` ticks run
+    assert(runner.loop(ticks = 3, tickMs = 0, stop = stopOnFailure) === 3)
+    assert(runs === 3)
+    // the 5th run fails on this loop's 2nd tick: the loop halts there
+    assert(runner.loop(ticks = 10, tickMs = 0, stop = stopOnFailure) === 2)
+    assert(runs === 5)
+    assert(j.history("job").map(r => r.status -> r.result) ===
+      (1 to 4).map(i => "SUCCEED" -> i.toString) :+ ("FAILED" -> "fifth"))
+  }
+
   test("ScriptJobs recompiles only when mtime changes, closes old instances") {
     var mtime = 1L
     var src = "v1"

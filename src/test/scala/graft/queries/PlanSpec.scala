@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
 import graft.SparkSpec
 
 /** Physical-plan audits: correctness tests prove the small-SF answer; these
@@ -680,9 +682,24 @@ class PlanSpec extends SparkSpec {
       !p.contains("ShuffledHashJoin") && !p.contains("CartesianProduct"), p)
     // the static plan repeats the widened-scan subtree per pick consumer
     // (bounds + bucket-counts + bases); at runtime the identical widen
-    // exchange dedups to one scan (ReusedExchange — PlanProbe-verified,
-    // plans/r21/table_profile_final.txt)
+    // exchange dedups to one scan (next test, on the final plan)
     assert("Scan parquet".r.findAllIn(p).size <= 12, p)
+  }
+
+  test("table_profile: at runtime the repeated widen exchange runs ONCE " +
+      "and every other consumer reads it as a ReusedExchange (final " +
+      "adaptive plan, as graft.Plans writes it)") {
+    val fp = graft.Plans.finalPlan(Pipeline.tableProfileQ(spark, dir))
+    def isWiden(e: SparkPlan) = e match {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
+      case _ => false
+    }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    assert(fp.toString.startsWith("AdaptiveSparkPlan isFinalPlan=true"), fp)
+    assert(aqe.collect(fp) { case e if isWiden(e) => e }.size == 1, fp)
+    assert(aqe.collect(fp) {
+      case r: ReusedExchangeExec if isWiden(r.child) => r }.nonEmpty, fp)
+    assert(aqe.collect(fp) { case s: FileSourceScanExec => s }.size == 1, fp)
   }
 
   test("char_trigram_profile: explode -> one (source, gram) 2-phase " +
